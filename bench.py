@@ -1,16 +1,12 @@
 #!/usr/bin/env python
-"""Benchmark runner (driver contract + scaling evidence).
+"""Benchmark runner (driver contract).
 
-Default mode: runs the headline suite at $SPARK_GRAFT_SF_DIR (default
+Runs the headline suite at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
---scaling mode (north_rule evidence, run per round): executes the SAME dedup
-job at local[2] / local[8] / local[32] (N vs 4N cores — the sandbox proxy
-for N vs 4N executors), INTERLEAVED in rounds so the shared host's
-multi-minute throttling windows hit every level equally, computes
-throughput per level plus scaling efficiency = docs_per_sec_32 /
-(4 * docs_per_sec_8), and writes BENCH/BASELINE.md.
+Per-layer timings and the 1 -> N core scaling run live in perfbench/
+(``perfbench/run.py --trace 1``, ``perfbench/scaling.py``).
 
 Headline suite:
   dedup_pipeline      full MinHash/LSH/verify/CC over a deterministic synthetic
@@ -25,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import time
 
@@ -35,116 +30,16 @@ sys.path.insert(0, _REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_CORPUS_DOCS = int(os.environ.get("BENCH_CORPUS_DOCS", "12000"))
-# --scaling uses a much bigger corpus (2x round-4, 8x round-2): the scaling
-# gate must be throughput-bound — fixed per-job overhead (driver latency, JVM
-# warmup) at small corpora swamps the parallel fraction and caps measurable
-# efficiency; at 741k generated docs the dedup job's compute share dominates
-SCALING_CORPUS_DOCS = int(os.environ.get("SCALING_CORPUS_DOCS", "480000"))
-# CPU-affinity pinning for the scaling children (default ON): `local[N]`
-# bounds TASK SLOTS to N, but the JVM's GC/netty/shuffle/Arrow threads and
-# the forked Python UDF workers schedule across every host core — so an
-# unpinned local[2] child borrows far more than 2 cores, which deflates the
-# measured N→4N ratio in a way no real cluster exhibits (YARN/k8s cgroup-pin
-# an executor's whole process tree to its core grant). `taskset -c 0..N-1`
-# around the child is the faithful N-core-executor emulation; the ALU/DRAM
-# ceiling probes run under the same mask so ceilings stay matched.
-SCALING_PIN_CPUS = os.environ.get("SCALING_PIN_CPUS", "1") == "1"
-# interleaved-round and timed-rep counts for --scaling. CPU-pinned children
-# are the honest-but-slow protocol (a pinned local[2] pass at the 2x corpus
-# runs on exactly 2 cores, ~20 min/pass), so the wall-clock budget decides
-# these: rounds=2 x repeats=2 is the full protocol; SCALING_ROUNDS=1
-# SCALING_REPEATS=1 is the budget-constrained variant (each child still runs
-# a discarded warm-up pass, and the per-stage instrumented pass provides the
-# de-noised supplementary figure).
-SCALING_ROUNDS = int(os.environ.get("SCALING_ROUNDS", "2"))
-
-
-def _parse_repeats(spec: str) -> dict[int, int]:
-    """SCALING_REPEATS: one int (every level) or 'r2,r8,r32' per level.
-    Timed reps sample host-grant windows, and windows — not the engine —
-    have dominated the high-core levels (r05 run2: the local[32] rep
-    launched into a half-grant window, 858s e2e vs its own 202s stage
-    sum). Reps are cheap exactly where more window samples are needed
-    (a local[32] rep is ~1/4 the cost of a local[2] rep), so asymmetric
-    specs like '1,2,3' buy window diversity where it is affordable."""
-    parts = [int(p) for p in spec.split(",")]
-    if len(parts) == 1:
-        return {2: parts[0], 8: parts[0], 32: parts[0]}
-    if len(parts) != 3:
-        raise ValueError("SCALING_REPEATS must be an int or 'r2,r8,r32'")
-    return dict(zip((2, 8, 32), parts))
-
-
-SCALING_REPEATS = _parse_repeats(os.environ.get("SCALING_REPEATS", "2"))
-# merge prior samples into the best-window pool (default ON): the jsonl
-# keeps every sample ever taken; a best-window-per-level read over ALL
-# pinned, stage-probed samples at the same corpus size is strictly more
-# drift-robust than one run's windows (the interleaved-rounds idea,
-# extended across runs). Only samples matching this run's protocol are
-# eligible: pinned, same doc count, per-stage boundary probes present.
-# The report records how many prior samples joined the pool.
-SCALING_MERGE_SAMPLES = os.environ.get("SCALING_MERGE_SAMPLES", "1") == "1"
-# engine version tag: bump whenever a change lands in the scaling job's hot
-# path (features/candidates/verify/CC) — pooled best-window comparisons are
-# only fair between windows running the SAME engine code, so the pool filter
-# keys on this. Samples written before the tag existed are the round-4/5
-# pre-bootstrap-LSH engine ("r5a").
-SCALING_ENGINE_TAG = os.environ.get("SCALING_ENGINE_TAG", "r5b-lsh-bootstrap")
-_PRE_TAG_ENGINE = "r5a"
-# warm-up corpus size: the discarded warm-up rep exists to absorb one-time
-# costs (codegen compilation, python-worker fork pool, parquet page cache) —
-# none of which needs a FULL pass. A pinned local[2] full pass at the 2x
-# corpus is ~30 min, so by default the warm-up runs the same pipeline over a
-# limit()-ed slice (0 = full-corpus warm-up, the round-4 behavior); a cheap
-# full-corpus column scan afterwards warms the page cache for the data pages
-# the slice skipped.
-SCALING_WARMUP_DOCS = int(os.environ.get("SCALING_WARMUP_DOCS", "80000"))
-# host-ceiling probe duration (seconds per probe). The parent's per-child
-# bracketing probes default to 4s; the child's per-stage boundary probes set
-# this to 2s in their own environment (10 boundary probes per child must not
-# rival a stage's runtime).
-SCALING_PROBE_SECS = float(os.environ.get("SCALING_PROBE_SECS", "4"))
-# launch gate: the host's per-proc cycle grant drifts in multi-minute windows
-# (measured 0.96e8..3.5e8 cycles/proc within one run — a 3.7x swing). When
-# SCALING_GATE > 0, each child's launch waits (up to SCALING_GATE_WAIT sec)
-# until a quick pinned ALU probe at that child's core count reads at least
-# GATE x the best per-proc grant seen for that core count this run — so no
-# level's only sample lands in a grant collapse. After the wait budget the
-# child launches anyway (the bracketing probes still record the regime).
-SCALING_GATE = float(os.environ.get("SCALING_GATE", "0.85"))
-SCALING_GATE_WAIT = float(os.environ.get("SCALING_GATE_WAIT", "600"))
-
-
-def _parse_levels(spec: str) -> tuple[int, ...]:
-    """SCALING_LEVELS: comma-separated subset of 2,8,32 — the parallelism
-    levels THIS invocation samples. The report always reads each level's
-    best window from the cross-run pool (scaling_samples.jsonl), so once
-    every level has at least one pooled sample at the current corpus, a
-    budget-constrained run can spend its whole window budget on the level
-    that still needs clean windows (in practice local[8] — the 2→8 gate's
-    numerator) instead of resampling levels whose best window is already
-    pinned. An empty spec ('') samples nothing and just regenerates the
-    report from the pool."""
-    spec = spec.strip()
-    if not spec:
-        return ()
-    levels = tuple(int(p) for p in spec.split(","))
-    if any(c not in (2, 8, 32) for c in levels):
-        raise ValueError("SCALING_LEVELS must be a subset of 2,8,32")
-    return levels
-
-
-SCALING_LEVELS = _parse_levels(os.environ.get("SCALING_LEVELS", "2,8,32"))
 # min-of-N per query: this sandbox is a shared VM with heavy noisy-neighbor
 # interference (identical code measured 13.8s..29.3s back-to-back) — the
-# minimum estimates true machine capability (same methodology as --scaling)
+# minimum estimates true machine capability
 BENCH_REPEATS = int(os.environ.get("BENCH_REPEATS", "2"))
 DATA_DIR = os.path.join(_REPO, "BENCH", "data")
 
 
 def _corpus_file_count(n_base_docs: int) -> int:
     """Files in the multi-file corpus layout: ~1 file per 2k base docs,
-    capped at 32 (the scaling harness's max core count)."""
+    capped at 32."""
     return max(1, min(32, n_base_docs // 2000))
 
 
@@ -365,1172 +260,5 @@ def run_bench(master: str | None = None, shuffle: int | None = None) -> dict:
     }
 
 
-def _scaling_child(cores: int, repeats: int = 2, warmup: int = 1) -> dict:
-    """Run the dedup job in a fresh subprocess at local[cores], with the
-    subprocess tree CPU-pinned to exactly ``cores`` host CPUs (taskset;
-    see SCALING_PIN_CPUS) so "N cores" means N cores like it does for a
-    cgroup-pinned cluster executor.
-
-    ``warmup`` DISCARDED reps run first (codegen compilation, python-worker
-    fork pool, parquet footer/page cache — round-4 showed rep 1 absorbing
-    startup cost unevenly across levels when a throttle window flipped
-    mid-child), then the job runs ``repeats`` timed reps in the warm JVM and
-    the BEST time is reported (see run_scaling for the interleaving that
-    makes levels comparable on this noisy host). After the end-to-end
-    repeats, ONE instrumented pass times each pipeline stage separately
-    (every stage persisted + counted so timings are additive) — the
-    per-stage 8-vs-32 table is what attributes any residual efficiency gap
-    to a specific stage instead of a narrative, and the stage-pass SUM is a
-    shorter-window (less throttle-exposed) supplementary efficiency figure.
-
-    shuffle partitions are CONSTANT (32) across levels: the scaling question
-    is "same job, same physical plan, 4x the cores" — the cluster analog of
-    fixing the shuffle partitioning and quadrupling executors. (Scaling
-    partitions with cores conflates two variables, and 4x32=128 partitions
-    on this small corpus measurably anti-scaled: 22s → 82s at local[32]
-    purely from per-partition fixed costs.)
-    """
-    sp = 32
-    code = f"""
-import json, os, sys, time
-os.environ["SCALING_PROBE_SECS"] = "2"  # short boundary probes (10/child)
-sys.path.insert(0, {_REPO!r})
-import bench
-from product_deduplication_spark.session import get_spark
-from product_deduplication_spark.config import DedupConfig
-from product_deduplication_spark.pipeline import run_dedup, prepare_docs, pick_winners
-from product_deduplication_spark.functions.features import with_features
-from product_deduplication_spark.operators.lsh import candidate_pairs
-from product_deduplication_spark.operators.verify import verify_pairs
-from product_deduplication_spark.operators.exact_dedup import exact_duplicate_edges
-from product_deduplication_spark.operators.connected_components import assign_clusters_contracted
-from pyspark.sql import functions as F
-# 32 MiB split size: the corpus is 32 x ~32 MB files (_ensure_bench_corpus);
-# the default 128 MiB bin-packs them into ~11 scan tasks, capping scan AND
-# feature-kernel parallelism below the core count at local[32]. 32 MiB means
-# one file per task — the cluster analog of one Iceberg data file per split.
-spark = get_spark(app_name="bench-scaling", master="local[{cores}]",
-                  shuffle_partitions={sp},
-                  extra_conf={{"spark.sql.files.maxPartitionBytes": "33554432"}})
-spark.range(1000).selectExpr("sum(id)").collect()
-web = spark.read.parquet(bench._ensure_bench_corpus({SCALING_CORPUS_DOCS}))
-n = web.count()
-cfg = DedupConfig(shuffle_partitions={sp})
-def _probe():
-    # contemporaneous host-grant probe at THIS child's core count, under
-    # the same CPU mask the job runs under (2s ALU + 2s DRAM)
-    import multiprocessing as mp
-    with mp.Pool({cores}, initializer=bench._pin_to, initargs=({cores},)) as p:
-        alu = sum(p.map(bench._alu_probe, range({cores})))
-    with mp.Pool({cores}, initializer=bench._pin_to, initargs=({cores},)) as p:
-        dram = sum(p.map(bench._dram_probe, range({cores})))
-    return {{"alu": alu, "dram": dram}}
-# DISCARDED warm-up: one-time costs (codegen compilation, python-worker
-# fork pool) amortize on a limit()-ed slice at a fraction of a full pass;
-# a full-corpus column scan afterwards warms the parquet page cache for
-# the data pages the slice skipped
-wdocs = {SCALING_WARMUP_DOCS}
-warm = web.limit(wdocs) if wdocs and wdocs < n else web
-for _ in range({warmup}):
-    wres = run_dedup(warm, cfg)
-    wres.clusters.select(F.countDistinct("cluster_id")).collect()
-    wres.release()
-if wdocs and wdocs < n:
-    web.select(F.sum(F.length("text")), F.sum(F.length("url"))).collect()
-best, nc = None, None
-for rep in range({repeats}):
-    t0 = time.perf_counter()
-    res = run_dedup(web, cfg)
-    nc_rep = res.clusters.select(F.countDistinct("cluster_id")).collect()[0][0]
-    dt = time.perf_counter() - t0
-    res.release()
-    if nc is None:
-        nc = nc_rep
-    assert nc_rep == nc, "nondeterministic cluster count across repeats"
-    if best is None or dt < best:
-        best = dt
-# per-stage instrumented pass (additive: persist + count per stage), each
-# stage boundary bracketed by a contemporaneous grant probe so every
-# stage's efficiency can be read against what the host was granting
-# DURING that stage's own window (not a probe minutes away)
-stages = {{}}
-probes = {{"start": _probe()}}
-t = time.perf_counter()
-docs = prepare_docs(web, cfg)
-eligible = docs.where(F.length("text") >= cfg.min_doc_chars)
-feats = with_features(eligible.select("doc_id", "text"), cfg, simhash=False
-        ).select("doc_id", "shingles", "minhash", "simhash", "bands").persist()
-feats.count()
-stages["features"] = round(time.perf_counter() - t, 3)
-probes["features"] = _probe(); t = time.perf_counter()
-pairs = candidate_pairs(feats, cfg).persist()
-pairs.count()
-stages["candidates"] = round(time.perf_counter() - t, 3)
-probes["candidates"] = _probe(); t = time.perf_counter()
-near = verify_pairs(pairs, feats, cfg).select("src", "dst").persist()
-near.count()
-stages["verify"] = round(time.perf_counter() - t, 3)
-probes["verify"] = _probe(); t = time.perf_counter()
-exact = exact_duplicate_edges(eligible, "doc_id", "text")
-clustered = pick_winners(assign_clusters_contracted(
-    docs, exact.select("src", "dst"), near, "doc_id"))
-clustered.select(F.countDistinct("cluster_id")).collect()
-stages["exact_cc_winners"] = round(time.perf_counter() - t, 3)
-probes["exact_cc_winners"] = _probe()
-for df in (feats, pairs, near):
-    df.unpersist()
-print("RESULT:" + json.dumps({{"cores": {cores}, "sec": round(best,3),
-      "docs": n, "docs_per_sec": round(n/best,1), "clusters": int(nc),
-      "repeats": {repeats}, "warmup_reps": {warmup}, "warmup_docs": wdocs,
-      "stages": stages, "stage_probes": probes}}))
-spark.stop()
-"""
-    argv = [sys.executable, "-c", code]
-    pinned = SCALING_PIN_CPUS and shutil.which("taskset") is not None
-    if pinned:
-        # pin the child's WHOLE process tree (JVM + forked python workers
-        # inherit the mask) to exactly `cores` CPUs — the cluster analog of
-        # an executor's cgroup cpuset; see SCALING_PIN_CPUS above
-        argv = ["taskset", "-c", f"0-{cores - 1}", *argv]
-    # pinned local[2] at the 2x corpus legitimately needs ~40 min; leave
-    # headroom for a throttle window rather than killing the whole run
-    out = subprocess.run(argv, capture_output=True, text=True, timeout=7200)
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT:"):
-            return json.loads(line[len("RESULT:") :]) | {"pinned": pinned}
-    raise RuntimeError(f"scaling child ({cores} cores) failed:\n{out.stderr[-3000:]}")
-
-
-def _alu_probe(_):
-    import numpy as np
-
-    x = np.arange(200_000, dtype=np.uint64)
-    # best-of-3 sub-windows: a single starved scheduling slice (observed:
-    # one slice granting ~0.1% of normal) must not define the probe rate —
-    # the probe measures the GRANT CEILING, so the best slice is the signal
-    best = 0.0
-    for _w in range(3):
-        t0 = time.perf_counter()
-        it = 0
-        while time.perf_counter() - t0 < SCALING_PROBE_SECS / 3:
-            x = x * np.uint64(0x9E3779B97F4A7C15) + np.uint64(12345)
-            x ^= x >> np.uint64(29)
-            it += 1
-        best = max(best, it * x.size / (time.perf_counter() - t0))
-    return best
-
-
-def _pin_to(n: int) -> None:
-    """Pool-worker initializer: restrict to the same CPU mask the job child
-    runs under (see SCALING_PIN_CPUS) so ceilings are measured at matched
-    affinity. No-op when pinning is disabled or unsupported."""
-    if SCALING_PIN_CPUS and hasattr(os, "sched_setaffinity"):
-        os.sched_setaffinity(0, set(range(n)))
-
-
-def _alu_rate(n: int) -> float:
-    """Aggregate ALU throughput of n concurrent processes (pure-ALU,
-    L2-resident numpy loop: no shuffle, no GIL, no memory-bandwidth
-    pressure) — the instantaneous compute CEILING the host grants n procs."""
-    import multiprocessing as mp
-
-    with mp.Pool(n, initializer=_pin_to, initargs=(n,)) as p:
-        return sum(p.map(_alu_probe, range(n)))
-
-
-def _dram_probe(_):
-    import numpy as np
-
-    n = 8 * 1024 * 1024  # 3 x 64 MiB streams, far beyond LLC
-    a = np.random.rand(n)
-    b = np.random.rand(n)
-    c = np.empty(n)
-    np.add(a, b, out=c)  # pre-touch c: page-fault its 64 MiB OUTSIDE timing
-    # best-of-3 sub-windows, same rationale as _alu_probe
-    best = 0.0
-    for _w in range(3):
-        t0 = time.perf_counter()
-        it = 0
-        while time.perf_counter() - t0 < SCALING_PROBE_SECS / 3:
-            np.add(a, b, out=c)
-            it += 1
-        best = max(best, it * 3 * 64 / (time.perf_counter() - t0))
-    return best  # MiB/s of DRAM traffic
-
-
-def _dram_rate(n: int) -> float:
-    """Aggregate DRAM bandwidth of n concurrent processes (STREAM-add over
-    arrays far larger than last-level cache: every iteration streams from
-    memory) — the MEMORY-BANDWIDTH ceiling at matched pressure. A single box
-    shares one memory controller across all threads; measured here it
-    saturates near 8 procs (8->32 ~ 1.1x, a ~0.28 scaling ceiling), which is
-    exactly what a real 4N-executor cluster does NOT do — each executor
-    brings its own controller."""
-    import multiprocessing as mp
-
-    with mp.Pool(n, initializer=_pin_to, initargs=(n,)) as p:
-        return sum(p.map(_dram_probe, range(n)))
-
-
-def _wait_for_grant(cores: int, best_seen: dict[int, float]) -> dict:
-    """Launch gate (see SCALING_GATE): block until the host's current
-    per-proc ALU grant at `cores` pinned procs recovers to within GATE of
-    the best grant seen for that core count this run, or the wait budget
-    expires (the child then launches anyway — the bracketing probes record
-    the degraded regime). Prevents a level's only sample landing in a
-    grant collapse like r05 run1's local[32] features window (0.96e8/proc
-    vs 3.51e8/proc hours earlier)."""
-    if SCALING_GATE <= 0:
-        return {"gated": False}
-    t0 = time.time()
-    while True:
-        rate = _alu_rate(cores) / cores
-        best = max(best_seen.get(cores, 0.0), rate)
-        best_seen[cores] = best
-        met = rate >= SCALING_GATE * best
-        if met or (time.time() - t0) > SCALING_GATE_WAIT:
-            return {
-                "gated": True,
-                "gate_perproc_rate": round(rate, 1),
-                "gate_best_perproc_rate": round(best, 1),
-                "gate_waited_sec": round(time.time() - t0, 1),
-                "gate_met": met,
-            }
-        time.sleep(45)
-
-
-def _prior_samples(path: str) -> list[dict]:
-    """All pinned samples previously appended to scaling_samples.jsonl.
-    Used to (a) seed the launch gate's per-level reference grants — r05
-    run2 showed the same-run-only reference passing trivially when every
-    window of a level within one run is degraded — and (b) extend the
-    best-window-per-level pool across runs (see SCALING_MERGE_SAMPLES)."""
-    out: list[dict] = []
-    try:
-        with open(path) as f:
-            for line in f:
-                try:
-                    d = json.loads(line)
-                except ValueError:
-                    continue
-                if d.get("pinned") and isinstance(d.get("cores"), int):
-                    out.append(d)
-    except OSError:
-        pass
-    return out
-
-
-def _seed_gate_refs(prior: list[dict]) -> dict[int, float]:
-    """Best per-proc ALU grant ever recorded per core count, from every
-    pinned sample's bracketing probe, gate telemetry, and stage-boundary
-    probes."""
-    best: dict[int, float] = {}
-    for d in prior:
-        c = d["cores"]
-        cands = [
-            d.get("alu_rate", 0.0) / c,
-            d.get("gate_best_perproc_rate", 0.0),
-            *(
-                p.get("alu", 0.0) / c
-                for p in (d.get("stage_probes") or {}).values()
-            ),
-        ]
-        best[c] = max(best.get(c, 0.0), *cands)
-    return best
-
-
-def run_scaling(rounds: int | None = None) -> dict:
-    """Interleaved, ceiling-normalized measurement. Two measured host
-    pathologies make naive timing meaningless here: (1) throttling arrives
-    in multi-minute windows (the same local[32] job: 25.7s vs 91.2s twenty
-    minutes apart), and (2) the host's aggregate-CPU grant DRIFTS — the
-    pure-ALU control measured 8→32-proc scaling ceilings from 0.26 to 1.01
-    within one hour. So each round runs every level back-to-back, and each
-    job run is bracketed by a contemporaneous ALU-ceiling probe; the
-    per-level minimum across rounds picks each level's best window, and the
-    per-round ceiling contextualizes the raw efficiency. Default is
-    rounds=2 at the 2x corpus (r04 verdict): a bigger compute share per
-    level beats more rounds at a smaller, overhead-dominated corpus.
-
-    Each completed sample is APPENDED to BENCH/scaling_samples.jsonl the
-    moment its child returns — a multi-hour measurement must survive the
-    parent dying mid-run (the first pinned round-5 attempt held every
-    result in parent memory until all rounds finished and lost 84 minutes
-    of measurement to a restart)."""
-    if rounds is None:
-        rounds = SCALING_ROUNDS
-    _ensure_bench_corpus(SCALING_CORPUS_DOCS)
-    corpus_files = _corpus_file_count(SCALING_CORPUS_DOCS)
-    os.makedirs(os.path.join(_REPO, "BENCH"), exist_ok=True)
-    samples_path = os.path.join(_REPO, "BENCH", "scaling_samples.jsonl")
-    samples: dict[int, list[dict]] = {2: [], 8: [], 32: []}
-    # read prior samples ONCE, before this run appends its own (so the
-    # merge below cannot double-count this run's windows)
-    prior = _prior_samples(samples_path)
-    # seed the launch gate's per-level reference grants from every grant
-    # ever recorded for that core count (prior runs' telemetry), topped
-    # up with one quick probe each, so a run whose every window at one
-    # level is degraded cannot gate itself against its own collapse
-    best_seen: dict[int, float] = {}
-    if SCALING_GATE > 0 and SCALING_LEVELS:
-        best_seen = _seed_gate_refs(prior)
-        for c in SCALING_LEVELS:
-            best_seen[c] = max(best_seen.get(c, 0.0), _alu_rate(c) / c)
-    for rnd in range(rounds if SCALING_LEVELS else 0):
-        for c in SCALING_LEVELS:
-            gate_info = _wait_for_grant(c, best_seen)
-            alu = _alu_rate(c)
-            dram = _dram_rate(c)
-            if SCALING_GATE > 0:
-                best_seen[c] = max(best_seen.get(c, 0.0), alu / c)
-            sample = _scaling_child(c, repeats=SCALING_REPEATS[c]) | {
-                "alu_rate": alu,
-                "dram_rate": dram,
-                "corpus_files": corpus_files,
-                "engine": SCALING_ENGINE_TAG,
-                **gate_info,
-            }
-            samples[c].append(sample)
-            with open(samples_path, "a") as f:
-                f.write(json.dumps({"round": rnd, "ts": time.time()} | sample) + "\n")
-    # best-window pool: this run's samples, plus (when merging) every
-    # prior pinned, stage-probed sample at the SAME corpus size — the
-    # interleaved-rounds de-noising idea extended across runs
-    this_run = [s for runs in samples.values() for s in runs]
-    if this_run:
-        docs_n = this_run[0]["docs"]
-    else:
-        # report-only invocation (SCALING_LEVELS=''): take the doc count
-        # from the pool's samples at the current corpus layout
-        cands = [
-            d
-            for d in prior
-            if d.get("corpus_files") == corpus_files
-            and (d.get("engine") or _PRE_TAG_ENGINE) == SCALING_ENGINE_TAG
-        ]
-        if not cands:
-            raise SystemExit(
-                "report-only run but no pooled samples match the current "
-                "corpus layout — run with SCALING_LEVELS=2,8,32 first"
-            )
-        docs_n = cands[0]["docs"]
-    # pool only samples measured on the SAME physical input AND engine code:
-    # docs count, file layout (corpus_files — pre-multi-file samples read a
-    # one-row-group file whose scans were serial, a different job
-    # physically), and engine tag (a best-window ratio between two engine
-    # versions measures the code delta, not scaling)
-    merged_prior = (
-        [
-            d
-            for d in prior
-            if d.get("docs") == docs_n
-            and d.get("corpus_files") == corpus_files
-            and (d.get("engine") or _PRE_TAG_ENGINE) == SCALING_ENGINE_TAG
-            and d.get("stage_probes")
-            and d.get("stages")
-        ]
-        if SCALING_MERGE_SAMPLES
-        else []
-    )
-    merged: dict[int, list[dict]] = {
-        c: runs + [d for d in merged_prior if d["cores"] == c]
-        for c, runs in samples.items()
-    }
-    missing = [c for c, runs in merged.items() if not runs]
-    if missing:
-        raise SystemExit(
-            f"no sample (this run or pooled) for local{missing} at the "
-            f"current corpus (docs={docs_n}, files={corpus_files}) — the "
-            "report needs every level once; run SCALING_LEVELS="
-            + ",".join(str(c) for c in missing)
-            + " (or the full 2,8,32) first"
-        )
-    results = {
-        c: min(runs, key=lambda r: r["sec"])
-        | {"rounds": rounds if SCALING_LEVELS else 0}
-        for c, runs in merged.items()
-    }
-
-    def _round_detail(lo: int, hi: int, i: int) -> dict | None:
-        if i >= len(samples[lo]) or i >= len(samples[hi]):
-            return None  # this invocation didn't sample one of the levels
-        lo_s, hi_s = samples[lo][i], samples[hi][i]
-        d = {
-            "eff": round(hi_s["docs_per_sec"] / (4 * lo_s["docs_per_sec"]), 3),
-            "ceiling": round(hi_s["alu_rate"] / (4 * lo_s["alu_rate"]), 3),
-            "dram_ceiling": round(hi_s["dram_rate"] / (4 * lo_s["dram_rate"]), 3),
-        }
-        # stage-pass-sum efficiency: the instrumented pass is one short,
-        # contiguous window per child — far less throttle-exposed than the
-        # multi-rep end-to-end timing, so its sum is the de-noised
-        # supplementary figure (same stages, additive by construction)
-        if "stages" in lo_s and "stages" in hi_s:
-            ss_lo = sum(lo_s["stages"].values())
-            ss_hi = sum(hi_s["stages"].values())
-            if ss_hi > 0:
-                d["stage_sum_eff"] = round(ss_lo / (4 * ss_hi), 3)
-        return d
-
-    def _per_round_entry(i: int) -> dict:
-        d32 = _round_detail(8, 32, i)
-        d8 = _round_detail(2, 8, i)
-        out: dict = {}
-        for suffix, d in (("8_32", d32), ("2_8", d8)):
-            out[f"eff_{suffix}"] = d["eff"] if d else None
-            out[f"ceiling_{suffix}"] = d["ceiling"] if d else None
-            out[f"dram_ceiling_{suffix}"] = d["dram_ceiling"] if d else None
-            out[f"stage_sum_eff_{suffix}"] = (
-                d.get("stage_sum_eff") if d else None
-            )
-        return out
-
-    per_round = [
-        _per_round_entry(i) for i in range(rounds if this_run else 0)
-    ]
-    # per-stage best-window times: min across the merged pool per
-    # (level, stage); keep the whole winning sample so its boundary
-    # probes travel with it
-    stage_names = list(
-        next(
-            r for runs in merged.values() for r in runs if r.get("stages")
-        ).get("stages", {})
-    )
-    stage_best_run = {
-        c: {
-            s: min(
-                (r for r in runs if "stages" in r), key=lambda r: r["stages"][s]
-            )
-            for s in stage_names
-        }
-        for c, runs in merged.items()
-    }
-    stage_best = {
-        c: {s: stage_best_run[c][s]["stages"][s] for s in stage_names}
-        for c in stage_best_run
-    }
-    stage_eff = {
-        s: round(stage_best[8][s] / (4 * stage_best[32][s]), 3)
-        if stage_best[32][s] > 0
-        else None
-        for s in stage_names
-    }
-    stage_eff_2to8 = {
-        s: round(stage_best[2][s] / (4 * stage_best[8][s]), 3)
-        if stage_best[8][s] > 0
-        else None
-        for s in stage_names
-    }
-
-    # --- contemporaneous per-stage ceilings ------------------------------
-    # each stage's efficiency is read against the host grant measured by
-    # the probes bracketing THAT stage's own window at both levels (the
-    # child emits "stage_probes": {start, features, candidates, ...}).
-    # matched resource per stage: features is the tiled numpy/Arrow kernel
-    # (compute-bound -> ALU); candidates/verify/exact_cc_winners are
-    # shuffle-dominated (-> DRAM, the single shared memory controller).
-    matched_resource = {
-        "features": "alu",
-        "candidates": "dram",
-        "verify": "dram",
-        "exact_cc_winners": "dram",
-    }
-    probe_order = ["start", *stage_names]
-
-    def _stage_grant(r: dict, s: str, kind: str) -> float | None:
-        pr = r.get("stage_probes") or {}
-        prev = probe_order[probe_order.index(s) - 1] if s in probe_order else "start"
-        vals = [p[kind] for p in (pr.get(prev), pr.get(s)) if p]
-        return sum(vals) / len(vals) if vals else None
-
-    def _contemporaneous(lo: int, hi: int) -> dict:
-        out = {}
-        for s in stage_names:
-            rl, rh = stage_best_run[lo][s], stage_best_run[hi][s]
-            eff = (
-                round(rl["stages"][s] / (4 * rh["stages"][s]), 3)
-                if rh["stages"][s] > 0
-                else None
-            )
-            row: dict = {"eff": eff}
-            for kind in ("alu", "dram"):
-                gl, gh = _stage_grant(rl, s, kind), _stage_grant(rh, s, kind)
-                row[f"{kind}_ceiling"] = (
-                    round(gh / (4 * gl), 3) if gl and gh else None
-                )
-            m = matched_resource.get(s, "alu")
-            mc = row.get(f"{m}_ceiling")
-            row["matched"] = m
-            row["met_matched_ceiling"] = (
-                eff is not None and mc is not None and eff >= mc
-            )
-            out[s] = row
-        return out
-
-    contemp_2to8 = _contemporaneous(2, 8)
-    contemp_8to32 = _contemporaneous(8, 32)
-    # stage-pass-sum efficiency from each level's best window (min per
-    # stage across rounds): the de-noised supplementary figure — additive
-    # stage timings from one short instrumented pass per child
-    stage_sum_best = {c: sum(stage_best[c].values()) for c in stage_best}
-    stage_sum_eff_best = {
-        "2to8": round(stage_sum_best[2] / (4 * stage_sum_best[8]), 3)
-        if stage_sum_best[8] > 0
-        else None,
-        "8to32": round(stage_sum_best[8] / (4 * stage_sum_best[32]), 3)
-        if stage_sum_best[32] > 0
-        else None,
-    }
-    # --- matched-window pairs (supplementary) ----------------------------
-    # The pooled headline compares each level's best window, but the host's
-    # grant drifts 3.7x between windows — so the best-window RATIO can pit a
-    # golden local[2] window against a throttled local[8] one (exactly the
-    # r05 situation). A real N-vs-4N cluster comparison holds the per-core
-    # grant equal BY CONSTRUCTION (same hardware, both runs unthrottled), so
-    # the pair of pooled windows whose measured per-proc ALU grants agree
-    # within 15% is the closest sandbox analog of the cluster experiment.
-    # Reported as a clearly-labeled supplementary figure, never the headline.
-    def _window_grant(r: dict, key: str = "alu") -> float | None:
-        """Mean per-proc grant (ALU or DRAM) across a sample's own probe
-        windows."""
-        vals = [r.get(f"{key}_rate") or 0.0] + [
-            p.get(key, 0.0) for p in (r.get("stage_probes") or {}).values()
-        ]
-        vals = [v for v in vals if v > 0]
-        return (sum(vals) / len(vals) / r["cores"]) if vals else None
-
-    def _joint_match(rl: dict, rh: dict) -> float | None:
-        """Grant agreement of a window pair on BOTH probed resources — a
-        real N-vs-4N cluster holds per-core compute AND per-node bandwidth
-        equal, so a pair is only 'equal-grant' if the host granted both
-        within tolerance. ALU-only matching mislabels bandwidth-starved
-        large-N windows as fair (the shared controller never grants 32
-        procs the 8-proc per-proc bandwidth)."""
-        ms = []
-        for key in ("alu", "dram"):
-            gl, gh = _window_grant(rl, key), _window_grant(rh, key)
-            if not gl or not gh:
-                return None
-            ms.append(min(gl, gh) / max(gl, gh))
-        return min(ms)
-
-    def _matched_pair(
-        lo: int, hi: int, tol: float = 0.85, by: str = "eff"
-    ) -> dict | None:
-        """Best pooled window pair whose per-proc grants agree within tol
-        on BOTH probed resources (see _joint_match). by="eff" maximizes
-        raw efficiency (the most favorable fair pair); by="grant"
-        maximizes grant agreement (the pair closest to a real cluster's
-        equal-per-core-grant condition, regardless of whether its
-        efficiency flatters)."""
-        best = None
-        for rl in merged[lo]:
-            for rh in merged[hi]:
-                match = _joint_match(rl, rh)
-                if match is None or match < tol:
-                    continue
-                eff = rh["docs_per_sec"] / (4 * rl["docs_per_sec"])
-                key = eff if by == "eff" else match
-                if best is None or key > best["_key"]:
-                    best = {
-                        "_key": key,
-                        "eff": round(eff, 3),
-                        "grant_match": round(match, 3),
-                        "lo_perproc_grant": round(_window_grant(rl)),
-                        "hi_perproc_grant": round(_window_grant(rh)),
-                        "lo_sec": rl["sec"],
-                        "hi_sec": rh["sec"],
-                        "lo_ts": rl.get("ts"),
-                        "hi_ts": rh.get("ts"),
-                    }
-        if best is not None:
-            del best["_key"]
-        return best
-
-    matched_2_8 = _matched_pair(2, 8)
-    matched_8_32 = _matched_pair(8, 32)
-    tightest_2_8 = _matched_pair(2, 8, by="grant")
-    tightest_8_32 = _matched_pair(8, 32, by="grant")
-
-    def _matched_dist(lo: int, hi: int, tol: float = 0.85) -> dict | None:
-        """Efficiency distribution over ALL grant-matched pooled pairs —
-        quoting any single pair (max-eff or max-agreement) is selection;
-        the median over every fair pairing is the robust summary."""
-        effs = []
-        for rl in merged[lo]:
-            for rh in merged[hi]:
-                match = _joint_match(rl, rh)
-                if match is not None and match >= tol:
-                    effs.append(rh["docs_per_sec"] / (4 * rl["docs_per_sec"]))
-        if not effs:
-            return None
-        effs.sort()
-        n = len(effs)
-        med = (
-            effs[n // 2]
-            if n % 2
-            else (effs[n // 2 - 1] + effs[n // 2]) / 2
-        )
-        return {
-            "n_pairs": n,
-            "min_eff": round(effs[0], 3),
-            "median_eff": round(med, 3),
-            "max_eff": round(effs[-1], 3),
-        }
-
-    matched_dist_2_8 = _matched_dist(2, 8)
-    matched_dist_8_32 = _matched_dist(8, 32)
-
-    # --- prior engine pools ---------------------------------------------
-    # The headline above pools ONLY the current engine tag (a best-window
-    # ratio between two engine versions measures the code delta, not
-    # scaling) — but that makes every regeneration after a hot-path change
-    # erase the deepest measurement of the architecture from this file.
-    # Derive, per PRIOR engine tag at the same corpus + layout, the same
-    # best-window efficiencies and fair-pairing distribution, so a single
-    # BASELINE.md read carries the historical evidence with provenance
-    # (raw per-sample records stay in scaling_samples.jsonl).
-    def _pool_matched_dist(
-        pools: dict[int, list[dict]], lo: int, hi: int, tol: float = 0.85
-    ) -> dict | None:
-        effs = []
-        for rl in pools.get(lo, []):
-            for rh in pools.get(hi, []):
-                m = _joint_match(rl, rh)
-                if m is not None and m >= tol:
-                    effs.append(rh["docs_per_sec"] / (4 * rl["docs_per_sec"]))
-        if not effs:
-            return None
-        effs.sort()
-        n = len(effs)
-        med = effs[n // 2] if n % 2 else (effs[n // 2 - 1] + effs[n // 2]) / 2
-        return {"n": n, "min": effs[0], "med": med, "max": effs[-1]}
-
-    prior_pools: dict[str, dict[int, list[dict]]] = {}
-    for d in prior:
-        tag = d.get("engine") or _PRE_TAG_ENGINE
-        if (
-            tag != SCALING_ENGINE_TAG
-            and d.get("docs") == docs_n
-            and d.get("corpus_files") == corpus_files
-            and d.get("stage_probes")
-            and d.get("stages")
-            and d.get("cores") in (2, 8, 32)
-        ):
-            prior_pools.setdefault(tag, {}).setdefault(d["cores"], []).append(d)
-    prior_engine_rows = []
-    for tag, pools in sorted(prior_pools.items()):
-        if not all(pools.get(c) for c in (2, 8, 32)):
-            continue
-        best = {c: min(pools[c], key=lambda r: r["sec"]) for c in (2, 8, 32)}
-        p_eff_2_8 = best[8]["docs_per_sec"] / (4 * best[2]["docs_per_sec"])
-        p_eff_8_32 = best[32]["docs_per_sec"] / (4 * best[8]["docs_per_sec"])
-        dist = _pool_matched_dist(pools, 2, 8)
-        dist_txt = (
-            f"n={dist['n']}: {dist['min']:.3f} / {dist['med']:.3f} / "
-            f"{dist['max']:.3f}"
-            if dist
-            else "none"
-        )
-        prior_engine_rows.append(
-            f"| {tag} | {len(pools[2])}/{len(pools[8])}/{len(pools[32])} "
-            f"| {best[2]['sec']:.3f} | {best[8]['sec']:.3f} "
-            f"| {best[32]['sec']:.3f} | **{p_eff_2_8:.3f}** "
-            f"| {p_eff_8_32:.3f} | {dist_txt} |"
-        )
-    prior_engines_section = (
-        (
-            "## Prior engine pools (same corpus + layout, derived from"
-            " scaling_samples.jsonl)\n\n"
-            "Pools measured under earlier engine tags of this same"
-            " architecture, each\nread with the identical protocol"
-            " (pinned, gate-launched, stage-probed\nwindows; best window"
-            " per level; fair pairs = per-proc ALU AND DRAM grants\n"
-            "within 15%). The current tag's figures above never mix with"
-            " these; they\nare reported so a regeneration after a hot-path"
-            " change does not erase the\ndeepest measurement of the"
-            " architecture from this file:\n\n"
-            "| engine | windows 2/8/32 | best local[2] s | best local[8] s"
-            " | best local[32] s | raw eff(2→8) | raw eff(8→32)"
-            " | fair-pair eff(2→8) min/med/max |\n"
-            "|---|---|---|---|---|---|---|---|\n"
-            + "\n".join(prior_engine_rows)
-            + "\n"
-        )
-        if prior_engine_rows
-        else ""
-    )
-
-    eff_2_8 = results[8]["docs_per_sec"] / (4 * results[2]["docs_per_sec"])
-    eff_8_32 = results[32]["docs_per_sec"] / (4 * results[8]["docs_per_sec"])
-    ceiling = {
-        "2to8": round(results[8]["alu_rate"] / (4 * results[2]["alu_rate"]), 3),
-        "8to32": round(results[32]["alu_rate"] / (4 * results[8]["alu_rate"]), 3),
-    }
-    dram_ceiling = {
-        "2to8": round(results[8]["dram_rate"] / (4 * results[2]["dram_rate"]), 3),
-        "8to32": round(results[32]["dram_rate"] / (4 * results[8]["dram_rate"]), 3),
-    }
-    # ALU-normalized = eff/ceiling where both come from the SAME window
-    # pair. Candidates: each of this run's rounds, plus the pooled
-    # best-window pair (each pooled sample carries its own bracketing
-    # probe, so the pair's ceiling is just as contemporaneous).
-    pooled_norm_8_32 = (
-        (eff_8_32 / ceiling["8to32"]) if ceiling["8to32"] > 0 else 0.0
-    )
-    norm_8_32 = max(
-        (
-            r["eff_8_32"] / r["ceiling_8_32"]
-            for r in per_round
-            if r["eff_8_32"] is not None and (r["ceiling_8_32"] or 0) > 0
-        ),
-        default=0.0,
-    )
-    norm_8_32 = max(norm_8_32, pooled_norm_8_32)
-    # binding-ceiling normalization — SUPPLEMENTARY upper-bound figure only
-    # (r03 ADVICE): eff/min(alu, dram) is the conversion of the scarcer
-    # grant, which bounds the job's achievable efficiency ONLY IF the job is
-    # actually bound by that resource in that window. The headline numbers
-    # are raw and ALU-normalized; this one is reported with that caveat.
-    binding_norm_8_32 = max(
-        (
-            r["eff_8_32"] / min(r["ceiling_8_32"], r["dram_ceiling_8_32"])
-            for r in per_round
-            if r["eff_8_32"] is not None
-            and min(r["ceiling_8_32"] or 0, r["dram_ceiling_8_32"] or 0) > 0
-        ),
-        default=0.0,
-    )
-    pooled_binding = min(ceiling["8to32"], dram_ceiling["8to32"])
-    if pooled_binding > 0:
-        binding_norm_8_32 = max(binding_norm_8_32, eff_8_32 / pooled_binding)
-    clusters_match = len({r["clusters"] for r in results.values()}) == 1
-    # per-stage efficiency read against the matched-DRAM-pressure ceiling:
-    # the engine's stages stream shuffle + Arrow batches through the SAME
-    # saturated memory controller the STREAM probe measures
-    stage_eff_vs_dram = {
-        s: round(stage_eff[s] / dram_ceiling["8to32"], 3)
-        if stage_eff[s] is not None and dram_ceiling["8to32"] > 0
-        else None
-        for s in stage_names
-    }
-    report = {
-        "local2": results[2],
-        "local8": results[8],
-        "local32": results[32],
-        "scaling_efficiency_2to8": round(eff_2_8, 3),
-        "scaling_efficiency_8to32": round(eff_8_32, 3),
-        "host_alu_ceiling_best_window": ceiling,
-        "host_dram_ceiling_best_window": dram_ceiling,
-        "per_round_8to32": per_round,
-        "stage_sum_efficiency_best_window": stage_sum_eff_best,
-        # supplementary: best raw eff among pooled window pairs whose
-        # per-proc ALU grants agree within 15% (the cluster-analog pairing)
-        "matched_window_eff_2to8": matched_2_8,
-        "matched_window_eff_8to32": matched_8_32,
-        # tightest grant agreement rather than max efficiency — closest to
-        # a real cluster's equal-per-core-grant condition
-        "tightest_grant_pair_2to8": tightest_2_8,
-        "tightest_grant_pair_8to32": tightest_8_32,
-        # selection-free summary over every grant-matched pairing
-        "matched_pair_distribution_2to8": matched_dist_2_8,
-        "matched_pair_distribution_8to32": matched_dist_8_32,
-        "ceiling_normalized_efficiency_8to32": round(norm_8_32, 3),
-        # upper bound, not a headline: assumes the job is bound by the
-        # scarcer probe resource in that window (see generated BASELINE.md)
-        "binding_ceiling_upper_bound_8to32": round(binding_norm_8_32, 3),
-        "per_stage_sec_best": stage_best,
-        "per_stage_efficiency_2to8": stage_eff_2to8,
-        "per_stage_efficiency_8to32": stage_eff,
-        "per_stage_efficiency_8to32_vs_dram_ceiling": stage_eff_vs_dram,
-        "per_stage_contemporaneous_2to8": contemp_2to8,
-        "per_stage_contemporaneous_8to32": contemp_8to32,
-        "all_stages_met_matched_ceiling_2to8": all(
-            v["met_matched_ceiling"] for v in contemp_2to8.values()
-        ),
-        "all_stages_met_matched_ceiling_8to32": all(
-            v["met_matched_ceiling"] for v in contemp_8to32.values()
-        ),
-        "cpu_pinned": bool(results[8].get("pinned")),
-        "merged_prior_samples": len(merged_prior),
-        "best_window_pool_per_level": {c: len(runs) for c, runs in merged.items()},
-        "engine": SCALING_ENGINE_TAG,
-        "prior_engine_pools": {
-            tag: {
-                "windows": {c: len(pools.get(c, [])) for c in (2, 8, 32)},
-                "raw_eff_2to8": round(
-                    min(pools[8], key=lambda r: r["sec"])["docs_per_sec"]
-                    / (4 * min(pools[2], key=lambda r: r["sec"])["docs_per_sec"]),
-                    3,
-                ),
-                "raw_eff_8to32": round(
-                    min(pools[32], key=lambda r: r["sec"])["docs_per_sec"]
-                    / (4 * min(pools[8], key=lambda r: r["sec"])["docs_per_sec"]),
-                    3,
-                ),
-            }
-            for tag, pools in sorted(prior_pools.items())
-            if all(pools.get(c) for c in (2, 8, 32))
-        },
-        "target": 0.8,
-    }
-    # the measurement is hours of wall-clock: persist the raw report BEFORE
-    # rendering the markdown so a template bug can't lose the run
-    os.makedirs(os.path.join(_REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(_REPO, "BENCH", "scaling_last_run.json"), "w") as f:
-        json.dump(report, f, indent=1)
-
-    def _ratio(num, den):
-        return round(num / den, 3) if den and den > 0 else "?"
-
-    rows = "\n".join(
-        f"| local[{c}] | {r['sec']} | {r['docs_per_sec']} | {r['clusters']} |"
-        for c, r in results.items()
-    )
-    _no_pair = (
-        "| – | (pair not sampled this invocation — pooled best-window "
-        "figures above carry the headline) | | | | |"
-    )
-    per_round_rows = "\n".join(
-        f"| {i + 1} | {r['eff_8_32']} | {r['stage_sum_eff_8_32']} | "
-        f"{r['ceiling_8_32']} | "
-        f"{r['dram_ceiling_8_32']} | "
-        f"{_ratio(r['eff_8_32'], r['ceiling_8_32'])} | "
-        f"{_ratio(r['eff_8_32'], min(r['ceiling_8_32'], r['dram_ceiling_8_32']))} |"
-        for i, r in enumerate(per_round)
-        if r["eff_8_32"] is not None
-    ) or (_no_pair + " |")
-    per_round_rows_2_8 = "\n".join(
-        f"| {i + 1} | {r['eff_2_8']} | {r['stage_sum_eff_2_8']} | "
-        f"{r['ceiling_2_8']} | "
-        f"{r['dram_ceiling_2_8']} | "
-        f"{_ratio(r['eff_2_8'], r['ceiling_2_8'])} |"
-        for i, r in enumerate(per_round)
-        if r["eff_2_8"] is not None
-    ) or _no_pair
-    stage_rows = "\n".join(
-        f"| {s} | {stage_best[2][s]} | {stage_best[8][s]} | {stage_best[32][s]} | "
-        f"{stage_eff[s] if stage_eff[s] is not None else '?'} | "
-        f"{stage_eff_vs_dram[s] if stage_eff_vs_dram[s] is not None else '?'} |"
-        for s in stage_names
-    )
-    def _fmt(v):
-        return v if v is not None else "?"
-
-    contemp_rows = "\n".join(
-        f"| {s} | {contemp_2to8[s]['matched'].upper()} | "
-        f"{_fmt(contemp_2to8[s]['eff'])} | "
-        f"{_fmt(contemp_2to8[s][contemp_2to8[s]['matched'] + '_ceiling'])} | "
-        f"{'YES' if contemp_2to8[s]['met_matched_ceiling'] else 'no'} | "
-        f"{_fmt(contemp_8to32[s]['eff'])} | "
-        f"{_fmt(contemp_8to32[s][contemp_8to32[s]['matched'] + '_ceiling'])} | "
-        f"{'YES' if contemp_8to32[s]['met_matched_ceiling'] else 'no'} |"
-        for s in stage_names
-    )
-    _ceils = [
-        r["ceiling_8_32"] for r in per_round if r["ceiling_8_32"] is not None
-    ] or [ceiling["8to32"]]
-    min_ceiling = min(_ceils)
-    max_ceiling = max(_ceils)
-    # conclusions DERIVED from this run's measurements (r03 ADVICE: the
-    # previous template hardcoded data-dependent sentences that future runs
-    # would regenerate verbatim regardless of what they measured)
-    both_ceilings_sub_linear = ceiling["8to32"] < 1.0 and dram_ceiling["8to32"] < 1.0
-    ceiling_reading = (
-        "Both measured ceilings sit below 1.0 at 8→32 — the host granted "
-        "neither 4x compute nor 4x bandwidth to 32 processes in this run — "
-        "so raw efficiency must be read against them."
-        if both_ceilings_sub_linear
-        else "At least one measured ceiling reached linear (>= 1.0) at 8→32 "
-        "in this run's best window, so the raw number is directly "
-        "comparable to the 0.8 target in that window."
-    )
-    def _best_joint(lo: int, hi: int) -> float | None:
-        vals = [
-            _joint_match(rl, rh)
-            for rl in merged[lo]
-            for rh in merged[hi]
-        ]
-        vals = [v for v in vals if v is not None]
-        return round(max(vals), 3) if vals else None
-
-    def _matched_text(label: str, m: dict | None, lo: int, hi: int) -> str:
-        if m is None:
-            bj = _best_joint(lo, hi)
-            return (
-                f"- {label}: no pooled window pair with BOTH per-proc "
-                "grants (compute and bandwidth) within 15% yet"
-                + (
-                    f" — best joint agreement observed {bj}: the host "
-                    "physically never grants the high level the low "
-                    "level's per-proc resources, so no fair pairing "
-                    "exists to measure."
-                    if bj is not None
-                    else "."
-                )
-            )
-        return (
-            f"- {label}: **{m['eff']}** raw — lo window "
-            f"{m['lo_sec']}s at {m['lo_perproc_grant'] / 1e6:.0f}e6 "
-            f"ALU/proc vs hi window {m['hi_sec']}s at "
-            f"{m['hi_perproc_grant'] / 1e6:.0f}e6 ALU/proc "
-            f"(joint ALU+DRAM grant agreement {m['grant_match']})."
-        )
-
-    def _dist_text(label: str, d: dict | None) -> str:
-        if d is None:
-            return (
-                f"- {label}: no pooled window pair with per-proc grants "
-                "within 15% yet."
-            )
-        return (
-            f"- {label}: n={d['n_pairs']} pairs, eff min/median/max = "
-            f"{d['min_eff']} / **{d['median_eff']}** / {d['max_eff']}."
-        )
-
-    matched_section = f"""Matched-window pairs (supplementary): the pooled
-headline above compares each level's BEST window, but the host grant
-drifts 3.7x between windows, so that ratio can pit a golden small-level
-window against a throttled large-level one. A real N-vs-4N cluster run
-holds per-core grant equal by construction; the closest sandbox analog is
-the pooled window pair whose measured per-proc grants agree within 15%
-on BOTH probed resources (compute/ALU and memory-bandwidth/DRAM). Best raw efficiency among such pairs:
-
-{_matched_text("2→8", matched_2_8, 2, 8)}
-{_matched_text("8→32", matched_8_32, 8, 32)}
-
-Tightest-grant pair per transition (max grant agreement rather than max
-efficiency — the pair closest to a real cluster's equal-per-core-grant
-condition, quoted whether or not it flatters):
-
-{_matched_text("2→8", tightest_2_8, 2, 8)}
-{_matched_text("8→32", tightest_8_32, 8, 32)}
-
-Distribution over ALL grant-matched pairs (selection-free summary —
-equal-grant windows still differ by non-grant noise the probes can't see,
-so the median over every fair pairing is the robust figure):
-
-{_dist_text("2→8", matched_dist_2_8)}
-{_dist_text("8→32", matched_dist_8_32)}
-"""
-    gate_2_8_reading = (
-        f"**N→4N gate: 2→8 raw = {eff_2_8:.3f} — "
-        + ("MEETS" if eff_2_8 >= 0.8 else "below")
-        + " the 0.8 target (BASELINE.json north_rule).**"
-        + (
-            " The raw figure exceeds the window pair's measured ALU "
-            f"ceiling ({ceiling['2to8']}); the high level's per-proc grant "
-            "was the WORSE of the two (matched-window pair above), so the "
-            "measured efficiency is a lower bound on the engine's "
-            "equal-grant scaling, not a throttling artifact in its favor."
-            if eff_2_8 >= 0.8
-            and eff_2_8 > ceiling["2to8"]
-            and matched_2_8
-            and matched_2_8["hi_perproc_grant"]
-            <= matched_2_8["lo_perproc_grant"]
-            else ""
-        )
-    )
-    measured_stage_eff = {s: e for s, e in stage_eff.items() if e is not None}
-    if measured_stage_eff:
-        best_stage = max(measured_stage_eff, key=measured_stage_eff.get)
-        vs = stage_eff_vs_dram.get(best_stage)
-        stage_reading = (
-            f"Per stage, `{best_stage}` scales best raw "
-            f"(eff {measured_stage_eff[best_stage]}"
-            + (
-                f", {vs}x the matched-DRAM ceiling"
-                if vs is not None
-                else ""
-            )
-            + "); the per-stage table above attributes the residual gap."
-        )
-    else:
-        stage_reading = "No per-stage efficiencies were measurable this run."
-    md = f"""# BENCH/BASELINE — measured numbers (this engine)
-
-Protocol (task directive: the same job at two parallelism levels as the
-N-vs-4N-executor proxy — no real cluster exists in this sandbox): the SAME
-dedup job — full MinHash/LSH/verify/CC pipeline over the deterministic
-synthetic webtext corpus ({results[8]["docs"]} docs, seed=42) — run in fresh
-subprocesses at local[2], local[8], local[32] on identical input.
-CPU-affinity pinning: {"ON — each child's whole process tree (JVM + forked"
-" Python workers) is `taskset`-pinned to exactly N CPUs, the analog of a"
-" cluster executor's cgroup cpuset (`local[N]` alone bounds only task"
-" slots: an unpinned local[2] JVM borrows extra host cores for GC/"
-"netty/shuffle/Arrow threads, inflating the small level and deflating the"
-" ratio in a way no real N-core executor can). The ALU/DRAM ceiling probes"
-" run under the same mask." if results[8].get("pinned") else
-"OFF (SCALING_PIN_CPUS=0 or taskset unavailable) — local[N] bounds task"
-" slots only; JVM service threads may exceed N cores at small N."}
-
-| parallelism | wall sec | docs/sec | clusters |
-|---|---|---|---|
-{rows}
-
-**Scaling efficiency (N=2 → 4N=8)**  = {eff_2_8:.3f} raw
-(stage-pass-sum supplementary figure: {stage_sum_eff_best["2to8"]})
-**Scaling efficiency (N=8 → 4N=32)** = {eff_8_32:.3f} raw
-(stage-pass-sum: {stage_sum_eff_best["8to32"]}),
-**{norm_8_32:.3f} normalized to the host's contemporaneous compute (ALU)
-grant** (target >= 0.8, BASELINE.json north_rule; raw and ALU-normalized
-are the headline figures). Each child discards
-{results[8].get("warmup_reps", 0)} warm-up rep(s) before its timed reps.
-The stage-pass-sum figure sums the per-stage instrumented pass — one
-short contiguous window per child, so it is less exposed to the host's
-multi-minute throttle windows than the end-to-end repeats; it is
-supplementary, not the headline.
-
-Best-window pool per level ({
-f"this run's samples plus {len(merged_prior)} prior pinned, stage-probed"
-" sample(s) at the same corpus from scaling_samples.jsonl"
-if merged_prior and SCALING_LEVELS
-else f"report-only invocation: {len(merged_prior)} pooled pinned,"
-" stage-probed sample(s) at the current corpus from scaling_samples.jsonl"
-if merged_prior
-else "this run's samples only; no prior samples merged"}):
-local[2] = {len(merged[2])}, local[8] = {len(merged[8])},
-local[32] = {len(merged[32])} sample(s). The headline efficiencies and
-per-stage tables read each level's best window from this pool — the
-interleaved-rounds de-noising idea extended across runs (identical
-protocol: pinned children, same corpus, same config; every pooled
-sample's raw record, probes, and gate telemetry are in
-scaling_samples.jsonl).
-
-{matched_section}
-Per-round detail (each job run bracketed by TWO same-process-count
-host-ceiling probes — pure-ALU and STREAM-DRAM — so every raw efficiency
-can be read against what the host was actually granting at that moment):
-
-| round | raw eff(2→8) | stage-sum eff | ALU ceiling(2→8) | DRAM ceiling(2→8) | norm (vs ALU) |
-|---|---|---|---|---|---|
-{per_round_rows_2_8}
-
-| round | raw eff(8→32) | stage-sum eff | ALU ceiling(8→32) | DRAM ceiling(8→32) | norm (vs ALU) | norm (vs binding) |
-|---|---|---|---|---|---|---|
-{per_round_rows}
-
-Supplementary upper-bound figure: **eff / min(ALU, DRAM) =
-{binding_norm_8_32:.3f}** (8→32, best round). CAVEAT: dividing by the
-scarcer probe's grant treats that resource as the job's binding constraint,
-which holds only if the job actually saturates it in that window — stages
-can land above the DRAM ceiling (cache-resident compute) or above the ALU
-ceiling (pure streaming). Read it as "if the job were bound by the scarcer
-measured resource, it converted this fraction of what was grantable" — an
-optimistic bound, not the headline.
-
-**Host DRAM ceiling (best window): 2→8 = {dram_ceiling["2to8"]},
-8→32 = {dram_ceiling["8to32"]}.** The STREAM-add probe (3×64 MiB streams,
-far beyond last-level cache) measures the aggregate memory bandwidth the
-box grants N concurrent processes; it saturates the single shared memory
-controller near 8 procs. This is THE structural difference from a real
-cluster: 4N executors bring 4N memory controllers, this box brings one.
-
-Per-stage wall-clock (one instrumented pass per child, every stage
-persisted + counted so timings are additive; best window across rounds per
-level). This table attributes any residual gap to a specific stage, and the
-last column reads each stage against the matched-DRAM-pressure ceiling —
-the engine's stages stream shuffle + Arrow batches through the same
-saturated controller the probe measures:
-
-| stage | local[2] s | local[8] s | local[32] s | eff(8→32) | vs DRAM ceiling |
-|---|---|---|---|---|---|
-{stage_rows}
-
-Per-stage efficiency vs the CONTEMPORANEOUS matched ceiling: every stage
-boundary in the instrumented pass is bracketed by a 2s ALU + 2s DRAM probe
-run inside the child under the same CPU mask, so each stage's ratio is read
-against the grant the host was giving DURING that stage's own windows at
-both levels (not a probe minutes away). Matched resource: features = ALU
-(the tiled numpy/Arrow kernel is compute-bound); candidates / verify /
-exact_cc_winners = DRAM (shuffle-dominated, bound by the single shared
-memory controller). "met" = raw stage efficiency >= that stage's matched
-contemporaneous ceiling, i.e. the stage converted at least the fraction of
-linear that a program bound by its matched resource could have achieved in
-those windows:
-
-| stage | matched | eff(2→8) | ceiling(2→8) | met | eff(8→32) | ceiling(8→32) | met |
-|---|---|---|---|---|---|---|---|
-{contemp_rows}
-
-All stages met their matched contemporaneous ceiling:
-**2→8 = {"YES" if all(v["met_matched_ceiling"] for v in contemp_2to8.values()) else "no"},
-8→32 = {"YES" if all(v["met_matched_ceiling"] for v in contemp_8to32.values()) else "no"}.**
-
-Cluster counts across all levels match (same input, deterministic
-pipeline): {"MATCH" if clusters_match else "MISMATCH"}.
-
-{prior_engines_section}
-## Measurement methodology + host-throttling control
-
-This sandbox is a shared VM whose noisy-neighbor throttling arrives in
-multi-minute windows (identical local[32] code measured 25.7s and 91.2s
-twenty minutes apart, zero THP/compaction stalls in /proc/vmstat). So the
-levels are measured INTERLEAVED: {
-f'{results[8].get("rounds", 3)} round(s), each running '
-+ " → ".join(f"local[{c}]" for c in SCALING_LEVELS)
-+ " back-to-back in fresh subprocesses"
-f' ({results[8].get("repeats", 2)} warm-JVM repeats inside each)'
-if SCALING_LEVELS
-else "this invocation sampled no new windows (SCALING_LEVELS='') — the "
-"report reads the cross-run best-window pool described above"}, and every
-level reports its minimum across rounds — each level gets an equal shot at
-the host's good windows, so the RATIO (scaling efficiency) is fair even
-when absolute numbers wobble.
-
-Two control experiments bracket every job run:
-
-- **ALU ceiling** — a pure-ALU, L2-cache-resident numpy loop (zero
-  shuffle, zero memory-bandwidth pressure, embarrassingly parallel)
-  measures the aggregate compute the host grants N concurrent processes.
-  Its 8→32-proc ceiling DRIFTED between {min_ceiling} and {max_ceiling}
-  across this run's rounds — the host caps aggregate CPU below core count,
-  and the cap moves.
-- **DRAM ceiling** — a STREAM-add loop over 3×64 MiB arrays (every
-  iteration misses cache) measures aggregate memory bandwidth. 8→32 procs
-  = {dram_ceiling["8to32"]} of linear: the single shared memory controller
-  is saturated well before 32 threads. This is the matched-pressure ceiling
-  for shuffle- and Arrow-batch-bound stages.
-
-Launch gate: {"each child's launch waited (up to " + str(int(SCALING_GATE_WAIT)) + "s)"
-" until a quick pinned ALU probe at its core count read >= " + str(SCALING_GATE) +
-" of the best per-proc grant seen for that core count this run, so no"
-" level's sample lands in a grant collapse; gate telemetry is recorded"
-" per sample in scaling_samples.jsonl." if SCALING_GATE > 0 else
-"disabled (SCALING_GATE=0)."}
-
-## Reading the result (derived from this run's measurements)
-
-{gate_2_8_reading}
-
-{ceiling_reading}
-
-{stage_reading}
-
-On a real 4N-executor cluster each executor brings its own memory
-controller and bandwidth — the single shared controller measured here is a
-sandbox artifact. The scalable structure these numbers exercise
-(embarrassingly-parallel tiled Arrow feature kernels with precomputed band
-hashes, key-partitioned shuffles with algebraic map-side aggregation,
-hot-key star/re-band skew controls, exact-star contraction ahead of the
-O(log n) CC rounds) is pinned by the plan-shape tests in
-tests/test_plans_and_skew.py.
-
-Reference baseline: the reference repo publishes no benchmark numbers
-(BASELINE.md); the authoritative targets are dup-pair recall >= 0.99 (gated
-in tests/test_pipeline_recall.py and tests/test_parity.py) and the scaling
-efficiency above.
-
-Cross-run and round-over-round narrative lives in `BENCH/NOTES.md` — this
-file is REGENERATED by `bench.py --scaling` and must contain only
-machine-derived content.
-"""
-    with open(os.path.join(_REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
-    return report
-
-
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        print(json.dumps(run_scaling()))
-    else:
-        print(json.dumps(run_bench()))
+    print(json.dumps(run_bench()))

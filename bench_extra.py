@@ -6,14 +6,12 @@ stays untouched. This file exists so optimizations can be attributed:
 
   python bench_extra.py plans <tagdir>     dump .explain("formatted") for every
                                            headline query into plans/<tagdir>/
-  python bench_extra.py stages             additive per-stage timings for the
-                                           dedup pipeline (features/candidates/
-                                           verify/exact+cc+winners), plain and
-                                           simhash variants, on the bench corpus
   python bench_extra.py tj                 decompose tj_lsh_web + token_jaccard_lsh
                                            (features vs candidates vs verify)
   python bench_extra.py noop [name ...]    noop-sink isolated best-of-2 timings
                                            (guide §1.4) for the named queries
+
+Per-stage dedup timings come from ``perfbench/run.py --trace 1``.
 
 Sessions mirror bench.py exactly: local[$SPARK_GRAFT_CPUS], shuffle=32,
 $SPARK_GRAFT_SF_DIR data. Every job is labeled (guide §1.5).
@@ -124,78 +122,6 @@ def cmd_plans(tagdir: str, suffix: str = "") -> None:
     spark.stop()
 
 
-def cmd_stages() -> None:
-    """Additive per-stage pipeline timings on the bench corpus."""
-    from pyspark.sql import functions as F
-
-    from product_deduplication_spark.config import DedupConfig
-    from product_deduplication_spark.functions.features import with_features
-    from product_deduplication_spark.operators.connected_components import (
-        assign_clusters_contracted,
-    )
-    from product_deduplication_spark.operators.exact_dedup import exact_duplicate_edges
-    from product_deduplication_spark.operators.lsh import candidate_pairs
-    from product_deduplication_spark.operators.simhash_join import simhash_candidate_pairs
-    from product_deduplication_spark.operators.verify import verify_pairs
-    from product_deduplication_spark.pipeline import pick_winners, prepare_docs
-
-    from product_deduplication_spark.pipeline import run_dedup
-
-    spark = _spark()
-    sc = spark.sparkContext
-    web = _bench_corpus(spark)
-    cfg = DedupConfig(shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")))
-    # discarded warm-up pass (codegen, python-worker fork pool, page cache) so
-    # the first measured variant is not charged session startup
-    wres = run_dedup(web.limit(3000), cfg, use_simhash=True)
-    wres.clusters.select(F.countDistinct("cluster_id")).collect()
-    wres.release()
-    out: dict[str, dict[str, float]] = {}
-    for variant, use_simhash in (("plain", False), ("simhash", True)):
-        stages: dict[str, float] = {}
-        t = time.perf_counter()
-        sc.setJobDescription(f"stages[{variant}]: features")
-        docs = prepare_docs(web, cfg)
-        eligible = docs.where(F.length("text") >= cfg.min_doc_chars)
-        feats = (
-            with_features(eligible.select("doc_id", "text"), cfg, simhash=use_simhash)
-            .select("doc_id", "shingles", "minhash", "simhash", "bands")
-            .persist()
-        )
-        feats.count()
-        stages["features"] = round(time.perf_counter() - t, 3)
-        t = time.perf_counter()
-        sc.setJobDescription(f"stages[{variant}]: candidates")
-        pairs = candidate_pairs(feats, cfg)
-        if use_simhash:
-            pairs = pairs.unionByName(simhash_candidate_pairs(feats, cfg)).dropDuplicates(
-                ["src", "dst"]
-            )
-        pairs = pairs.persist()
-        pairs.count()
-        stages["candidates"] = round(time.perf_counter() - t, 3)
-        t = time.perf_counter()
-        sc.setJobDescription(f"stages[{variant}]: verify")
-        near = verify_pairs(pairs, feats, cfg).select("src", "dst").persist()
-        near.count()
-        stages["verify"] = round(time.perf_counter() - t, 3)
-        t = time.perf_counter()
-        sc.setJobDescription(f"stages[{variant}]: exact+cc+winners")
-        exact = exact_duplicate_edges(eligible, "doc_id", "text")
-        clustered = pick_winners(
-            assign_clusters_contracted(docs, exact.select("src", "dst"), near, "doc_id")
-        )
-        clustered.select(F.countDistinct("cluster_id")).collect()
-        stages["exact_cc_winners"] = round(time.perf_counter() - t, 3)
-        stages["sum"] = round(sum(stages.values()), 3)
-        for df in (near, pairs, feats):
-            df.unpersist()
-        sc.setJobDescription(None)
-        out[variant] = stages
-    print(json.dumps(out))
-    spark.stop()
-
-
 def cmd_tj() -> None:
     """Decompose tj_lsh_web and token_jaccard_lsh into features/cand/verify."""
     from pyspark.sql import functions as F
@@ -271,17 +197,15 @@ def cmd_noop(names: list[str]) -> None:
 
 
 if __name__ == "__main__":
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "stages"
+    cmd = sys.argv[1] if len(sys.argv) > 1 else None
     if cmd == "plans":
         cmd_plans(
             sys.argv[2] if len(sys.argv) > 2 else "r06",
             sys.argv[3] if len(sys.argv) > 3 else "",
         )
-    elif cmd == "stages":
-        cmd_stages()
     elif cmd == "tj":
         cmd_tj()
     elif cmd == "noop":
         cmd_noop(sys.argv[2:])
     else:
-        raise SystemExit(f"unknown command {cmd!r}")
+        raise SystemExit(f"unknown command {cmd!r}\n{__doc__}")

@@ -21,18 +21,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def exact_duplicate_edges(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicate_edges(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    delta_ids: DataFrame | None = None,
+) -> DataFrame:
     """Edges (src, dst, method='exact', similarity=1.0) linking each doc to
-    the min-id doc with byte-identical text."""
+    the min-id doc with byte-identical text.
+
+    ``delta_ids``: optional one-column DataFrame of node ids considered
+    "new", one row per id; when given, only hash groups containing a new node emit edges
+    (incremental batches: old-old exact edges are already inside prior
+    clusters). The group test is one more window aggregate over the same
+    exchange, not a semi-join and join-back."""
     hashed = df.select(F.col(id_col).alias("node"), F.sha2(F.col(text_col), 256).alias("h"))
     w = Window.partitionBy("h")
+    cols = [
+        "node",
+        F.min("node").over(w).alias("hub"),
+        F.count("*").over(w).alias("n"),
+    ]
+    keep = (F.col("n") > 1) & (F.col("node") != F.col("hub"))
+    if delta_ids is not None:
+        new = delta_ids.select(F.col(delta_ids.columns[0]).alias("node"), F.lit(True).alias("_n"))
+        hashed = hashed.join(new, "node", "left")
+        cols.append(F.max(F.coalesce(F.col("_n"), F.lit(False))).over(w).alias("_touched"))
+        keep = keep & F.col("_touched")
     return (
-        hashed.select(
-            "node",
-            F.min("node").over(w).alias("hub"),
-            F.count("*").over(w).alias("n"),
-        )
-        .where((F.col("n") > 1) & (F.col("node") != F.col("hub")))
+        hashed.select(*cols)
+        .where(keep)
         .select(
             F.col("hub").alias("src"),
             F.col("node").alias("dst"),

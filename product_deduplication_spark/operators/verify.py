@@ -33,43 +33,6 @@ def _sig32(col):
     )
 
 
-def minhash_estimate_prefilter(
-    pairs: DataFrame, features: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop candidates whose MinHash-estimated Jaccard is far below the
-    threshold BEFORE shipping full shingle arrays into the verify join.
-
-    Signatures are ~10x smaller than shingle sets (126 longs vs ~1.2k for a
-    web page), so this turns the verify join from O(candidates x set_size)
-    into O(candidates x sig_len) + O(survivors x set_size). The margin makes
-    the drop probability for a true >= threshold pair < 1e-11 (7 sigma at
-    126 hashes) — recall is preserved; exactness (precision) is untouched
-    because survivors still get the exact Jaccard check.
-    """
-    if cfg.prefilter_margin is None:
-        return pairs
-    sig = features.select(
-        F.col(id_col).alias("_sid"), _sig32(F.col("minhash")).alias("_sig")
-    )
-    a = sig.withColumnRenamed("_sid", "src").withColumnRenamed("_sig", "_sig_a")
-    b = sig.withColumnRenamed("_sid", "dst").withColumnRenamed("_sig", "_sig_b")
-    est = F.aggregate(
-        F.zip_with("_sig_a", "_sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(cfg.num_hashes)
-    cutoff = max(0.0, cfg.jaccard_threshold - cfg.prefilter_margin)
-    # merge hints: the signature sides grow with the corpus — never allow
-    # a (mis-estimated) broadcast of them (measured: a static broadcast of
-    # an array-carrying features relation aborted the driver at 370k docs)
-    return (
-        pairs.join(a.hint("merge"), "src")
-        .join(b.hint("merge"), "dst")
-        .where(est >= F.lit(cutoff))
-        .select("src", "dst")
-    )
-
-
 def verify_pairs(
     pairs: DataFrame,
     features: DataFrame,
@@ -111,8 +74,9 @@ def verify_pairs(
             lambda acc, x: acc + x,
         ) / F.lit(cfg.num_hashes)
         cutoff = max(0.0, cfg.jaccard_threshold - cfg.prefilter_margin)
-        # merge hints: see minhash_estimate_prefilter — the feature sides
-        # grow with the corpus and must never be (mis-estimate) broadcast
+        # merge hints: the feature sides grow with the corpus and must never
+        # be (mis-estimate) broadcast (measured: a static broadcast of an
+        # array-carrying features relation aborted the driver at 370k docs)
         joined = (
             pairs.join(sig_a.hint("merge"), "src")
             .join(b_side.hint("merge"), "dst")

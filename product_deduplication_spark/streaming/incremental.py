@@ -51,11 +51,16 @@ from pyspark.sql import DataFrame, Window, functions as F
 from product_deduplication_spark.caching import CacheScope
 from product_deduplication_spark.catalog import SnapshotCatalog
 from product_deduplication_spark.config import DedupConfig
-from product_deduplication_spark.functions.features import with_features
 from product_deduplication_spark.operators.connected_components import assign_clusters
+from product_deduplication_spark.operators.exact_dedup import exact_duplicate_edges
 from product_deduplication_spark.operators.lsh import candidate_pairs
 from product_deduplication_spark.operators.verify import verify_pairs
-from product_deduplication_spark.pipeline import pick_winners, prepare_docs
+from product_deduplication_spark.pipeline import (
+    clusters_with_winners,
+    doc_features,
+    eligible_docs,
+    prepare_docs,
+)
 
 DOCS_STAGE = "inc_docs"
 FEATURES_STAGE = "inc_features"
@@ -226,9 +231,7 @@ def incremental_dedup(
         )
 
     # feature reuse: hash ONLY the new docs
-    new_feats = with_features(truly_new.select("doc_id", "text"), cfg).select(
-        "doc_id", "shingles", "minhash", "simhash", "bands"
-    )
+    new_feats = doc_features(eligible_docs(truly_new, cfg), cfg, use_simhash=False)
     feats = new_feats if old_feats is None else old_feats.unionByName(new_feats)
     # every cache this batch creates (features + candidate_pairs internals)
     # is released before returning — a streaming job runs this once per
@@ -238,48 +241,24 @@ def incremental_dedup(
     feats = scope.persist(feats)
 
     # exact short circuit (V11): cheap sha2 equality, no LSH needed for hits.
-    # Delta-restricted like LSH: only hash groups containing a new doc emit
-    # edges (old-old exact edges are already inside prior clusters).
-    new_ids = truly_new.select("doc_id")
-    # one window over the (doc_id, h) relation replaces the former
-    # semi-join + groupBy + join-back chain (4 extra exchanges of the
-    # corpus-hash relation): per hash group, min/count give the star shape
-    # and max(is_new) restricts to groups touching the delta, exactly as
-    # the new_hashes semi-join did
-    hashed = all_docs.select("doc_id", F.sha2("text", 256).alias("h")).join(
-        new_ids.withColumn("_n", F.lit(True)), "doc_id", "left"
-    )
-    hw = Window.partitionBy("h")
-    exact_edges = (
-        hashed.select(
-            "doc_id",
-            F.min("doc_id").over(hw).alias("hub"),
-            F.count("*").over(hw).alias("n"),
-            F.max(F.coalesce(F.col("_n"), F.lit(False))).over(hw).alias("_touched"),
-        )
-        .where(F.col("_touched") & (F.col("n") > 1) & (F.col("doc_id") != F.col("hub")))
-        .select(F.col("hub").alias("src"), F.col("doc_id").alias("dst"))
-    )
-
-    # delta mode: only (new, any) candidate pairs — per-batch LSH cost is
-    # proportional to the delta, not the accumulated corpus
-    pairs = candidate_pairs(
-        feats, cfg, delta_ids=None if bootstrap else new_ids, scope=scope
-    )
+    # Delta mode for both channels: only hash groups / band buckets touching
+    # a new doc emit edges, so per-batch cost is proportional to the delta,
+    # not the accumulated corpus
+    new_ids = None if bootstrap else truly_new.select("doc_id")
+    exact_edges = exact_duplicate_edges(
+        eligible_docs(all_docs, cfg), "doc_id", "text", delta_ids=new_ids
+    ).select("src", "dst")
+    pairs = candidate_pairs(feats, cfg, delta_ids=new_ids, scope=scope)
     near = verify_pairs(pairs, feats, cfg).select("src", "dst")
 
     edges = exact_edges.unionByName(near)
     if prior_edges is not None:
         edges = edges.unionByName(prior_edges)
-    # _text_len below the label join: keeps the text payload out of the
-    # join exchange (this select prunes it from the window already)
-    clusters = pick_winners(
-        assign_clusters(
-            all_docs.withColumn("_text_len", F.length("text")),
-            edges.dropDuplicates(["src", "dst"]),
-            "doc_id",
-        )
-    ).select("url", "doc_id", "cluster_id", "is_winner")
+    # uncontracted CC: the prior-assignment edges (doc -> cluster_id) are not
+    # disjoint min-id stars, which assign_clusters_contracted requires
+    clusters = clusters_with_winners(
+        all_docs, lambda d: assign_clusters(d, edges.dropDuplicates(["src", "dst"]), "doc_id")
+    )
 
     # the CLUSTERS delta: new docs + old docs whose assignment or winner
     # flag changed (a new doc can bridge two old clusters or unseat an old

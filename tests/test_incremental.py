@@ -19,9 +19,14 @@ CFG = DedupConfig(shuffle_partitions=8)
 
 @pytest.fixture(scope="module")
 def corpus():
+    """Two batches with empty-text pages in both: those skip exact dedup
+    and must stay singletons, as they do in run_dedup."""
     docs, _ = generate_web_documents(n_base_docs=120, seed=21)
+    empty = pd.DataFrame({"url": [f"https://empty.example/{i}" for i in range(3)], "text": ""})
     half = len(docs) // 2
-    return docs.iloc[:half], docs.iloc[half:], docs
+    batch1 = pd.concat([docs.iloc[:half], empty.iloc[:1]], ignore_index=True)
+    batch2 = pd.concat([docs.iloc[half:], empty.iloc[1:]], ignore_index=True)
+    return batch1, batch2, pd.concat([batch1, batch2], ignore_index=True)
 
 
 def _partition_pairs(rows):

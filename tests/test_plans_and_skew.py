@@ -303,13 +303,15 @@ def test_no_forced_broadcast_of_corpus_sides_across_operators(spark):
 
 
 def _exchange_blocks(plan: str) -> list[str]:
-    """Detail blocks of the formatted plan belonging to Exchange nodes."""
+    """Detail blocks of the formatted plan belonging to shuffle and
+    broadcast Exchange nodes (a broadcast ships its side to every
+    executor, so a payload there counts as much as in a shuffle)."""
     blocks, cur, keep = [], [], False
     for ln in plan.splitlines():
         if ln.startswith("(") and ") " in ln:
             if keep and cur:
                 blocks.append("\n".join(cur))
-            keep = ") Exchange" in ln
+            keep = ") Exchange" in ln or ") BroadcastExchange" in ln
             cur = [ln]
         elif cur:
             cur.append(ln)
